@@ -21,12 +21,14 @@ sf-scaled but the plans are the ones we'd want on a 1000-executor cluster.
 
 from __future__ import annotations
 
+import math
 import os
 from typing import Callable, Dict
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pdfspark.pipeline import REPO_ROOT
+from pdfspark.pipeline import _worker_path, python_stage
+from pdfspark.textops import band_rows
 
 QUERIES: Dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: Dict[str, str] = {}
@@ -598,32 +600,15 @@ _MINHASH_DUCK = _minhash_duck_sql(cap=300)
 _BANDS_SCHEMA = "doc_id long, band int, sig string"
 
 
-def _minhash_band_batches(batches):
-    """mapInPandas body: (doc_id, text) → (doc_id, band, sig) rows for the
-    doc AND its synthesized 80%-prefix near-copy (doc_id+1000000, every
-    3rd doc) — the same corpus the oracle CTE builds in SQL."""
-    import math
-    import sys
-
-    if REPO_ROOT not in sys.path:
-        sys.path.insert(0, REPO_ROOT)
-    import pandas as pd
-
-    from pdfspark.textops import minhash_band_sigs
-
-    for b in batches:
-        rows = []
-        for doc_id, text in zip(b["doc_id"], b["text"]):
-            i = int(doc_id)
-            variants = [(i, text)]
-            if i % 3 == 0:
-                variants.append(
-                    (i + 1000000, text[: math.floor(len(text) * 0.8)])
-                )
-            for did, t in variants:
-                for band, sig in minhash_band_sigs(t):
-                    rows.append({"doc_id": did, "band": band, "sig": sig})
-        yield pd.DataFrame(rows, columns=["doc_id", "band", "sig"])
+def _minhash_band_rows(b):
+    """textops.band_rows over the docs AND their synthesized 80%-prefix
+    near-copies (doc_id+1000000, every 3rd doc) — the same corpus the
+    oracle CTE builds in SQL."""
+    m = b[b["doc_id"] % 3 == 0]
+    yield from band_rows(b)
+    yield from band_rows(m.assign(
+        doc_id=m["doc_id"] + 1000000,
+        text=[t[: math.floor(len(t) * 0.8)] for t in m["text"]]))
 
 
 def _dedup_minhash_impl(spark, sf_dir, cap: int):
@@ -637,7 +622,7 @@ def _dedup_minhash_impl(spark, sf_dir, cap: int):
         .filter(F.col("doc_id") < cap)
         .select("doc_id", "text")
     )
-    bands = docs.mapInPandas(_minhash_band_batches, _BANDS_SCHEMA)
+    bands = python_stage(docs, _BANDS_SCHEMA, _minhash_band_rows)
     buckets = (
         bands.groupBy("band", "sig")
         .agg(F.sort_array(F.collect_list("doc_id")).alias("ids"))
@@ -733,7 +718,7 @@ def dedup_incremental_minhash(spark, sf_dir):
             _INCR_BANDS_LIVE.pop().unpersist(blocking=False)
         except Exception:
             pass
-    bands = docs.mapInPandas(_minhash_band_batches, _BANDS_SCHEMA).persist()
+    bands = python_stage(docs, _BANDS_SCHEMA, _minhash_band_rows).persist()
     _INCR_BANDS_LIVE.append(bands)
     hist = bands.filter(F.col("doc_id") < 1000000).alias("h")
     new = bands.filter(F.col("doc_id") >= 1000000).alias("n")
@@ -1001,7 +986,8 @@ def _audio_meta_impl(spark, sf_dir):
     roundtrip_extract shape): every doc_id becomes a deterministic PCM
     WAV container whose header the REAL parser must read back exactly.
     Parity-pinned by tests/test_oracle.py::test_audio_meta_parity."""
-    from pdfspark.multimodal import AUDIO_META_SCHEMA
+    from pdfspark.multimodal import (
+        AUDIO_META_SCHEMA, parse_wav_header, synth_wav, wav_meta_row)
 
     _load(spark, sf_dir, "documents")
     # r9: widened scan — the synth+parse kernel otherwise runs in the
@@ -1009,29 +995,12 @@ def _audio_meta_impl(spark, sf_dir):
     from pdfspark.pipeline import _documents_repartitioned
     docs = _documents_repartitioned(spark, sf_dir).select("doc_id")
 
-    def run(batches):
-        import sys
+    def rows(b):
+        for doc_id in b["doc_id"]:
+            i = int(doc_id)
+            yield wav_meta_row(i, parse_wav_header(synth_wav(i)))
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.multimodal import (
-            parse_wav_header,
-            synth_wav,
-            wav_meta_row,
-        )
-
-        cols = [f.name for f in AUDIO_META_SCHEMA.fields]
-        for b in batches:
-            rows = [
-                wav_meta_row(int(doc_id),
-                             parse_wav_header(synth_wav(int(doc_id))))
-                for doc_id in b["doc_id"]
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.mapInPandas(run, AUDIO_META_SCHEMA)
+    return python_stage(docs, AUDIO_META_SCHEMA, rows)
 
 
 # Video modality twin of the audio harness: REAL ISO-BMFF (MP4) box
@@ -1056,7 +1025,8 @@ FROM documents
 def _video_meta_impl(spark, sf_dir):
     """Fused synth→parse MP4 metadata (registered r5;
     parity-pinned by tests/test_oracle.py::test_video_meta_parity)."""
-    from pdfspark.multimodal import VIDEO_META_SCHEMA
+    from pdfspark.multimodal import (
+        VIDEO_META_SCHEMA, mp4_meta_row, parse_mp4_header, synth_mp4)
 
     _load(spark, sf_dir, "documents")
     # r9: widened scan — the synth+parse kernel otherwise runs in the
@@ -1064,29 +1034,12 @@ def _video_meta_impl(spark, sf_dir):
     from pdfspark.pipeline import _documents_repartitioned
     docs = _documents_repartitioned(spark, sf_dir).select("doc_id")
 
-    def run(batches):
-        import sys
+    def rows(b):
+        for doc_id in b["doc_id"]:
+            i = int(doc_id)
+            yield mp4_meta_row(i, parse_mp4_header(synth_mp4(i)))
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.multimodal import (
-            mp4_meta_row,
-            parse_mp4_header,
-            synth_mp4,
-        )
-
-        cols = [f.name for f in VIDEO_META_SCHEMA.fields]
-        for b in batches:
-            rows = [
-                mp4_meta_row(int(doc_id),
-                             parse_mp4_header(synth_mp4(int(doc_id))))
-                for doc_id in b["doc_id"]
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.mapInPandas(run, VIDEO_META_SCHEMA)
+    return python_stage(docs, VIDEO_META_SCHEMA, rows)
 
 
 # Image modality (VERDICT r4 next #2): REAL header parsing — PNG IHDR,
@@ -1122,7 +1075,8 @@ def _image_meta_impl(spark, sf_dir):
     doc_id becomes a deterministic PNG/JPEG/BMP whose header the REAL
     parser must read back exactly. Parity-pinned by
     tests/test_oracle.py::test_image_meta_parity."""
-    from pdfspark.multimodal import IMAGE_HEADER_SCHEMA
+    from pdfspark.multimodal import (
+        IMAGE_HEADER_SCHEMA, image_meta_row, parse_image_header, synth_image)
 
     _load(spark, sf_dir, "documents")
     # r9: widened scan — the synth+parse kernel otherwise runs in the
@@ -1130,29 +1084,12 @@ def _image_meta_impl(spark, sf_dir):
     from pdfspark.pipeline import _documents_repartitioned
     docs = _documents_repartitioned(spark, sf_dir).select("doc_id")
 
-    def run(batches):
-        import sys
+    def rows(b):
+        for doc_id in b["doc_id"]:
+            i = int(doc_id)
+            yield image_meta_row(i, parse_image_header(synth_image(i)))
 
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
-        from pdfspark.multimodal import (
-            image_meta_row,
-            parse_image_header,
-            synth_image,
-        )
-
-        cols = [f.name for f in IMAGE_HEADER_SCHEMA.fields]
-        for b in batches:
-            rows = [
-                image_meta_row(int(doc_id),
-                               parse_image_header(synth_image(int(doc_id))))
-                for doc_id in b["doc_id"]
-            ]
-            yield pd.DataFrame(rows, columns=cols)
-
-    return docs.mapInPandas(run, IMAGE_HEADER_SCHEMA)
+    return python_stage(docs, IMAGE_HEADER_SCHEMA, rows)
 
 
 # Exact-substring decontamination (ROADMAP r4 #7): the stricter sibling
@@ -1226,31 +1163,21 @@ def decontaminate_exact_substring(spark, sf_dir):
         "FROM documents WHERE doc_id % 3 = 0"
     ).repartition(nparts, "doc_id")
 
-    def scan(batches):
-        import pandas as pd
-
+    def scan(b):
         pairs = b_bench.value
-        for b in batches:
-            ids, hits, firsts = [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                n = 0
-                first = None
-                for bench_id, x in pairs:
-                    if x in text:
-                        n += 1
-                        if first is None:
-                            first = bench_id
-                if n:
-                    ids.append(int(doc_id))
-                    hits.append(n)
-                    firsts.append(first)
-            yield pd.DataFrame(
-                {"doc_id": ids, "n_hits": hits, "first_bench_id": firsts},
-                columns=["doc_id", "n_hits", "first_bench_id"],
-            )
+        for doc_id, text in zip(b["doc_id"], b["text"]):
+            n = 0
+            first = None
+            for bench_id, x in pairs:
+                if x in text:
+                    n += 1
+                    if first is None:
+                        first = bench_id
+            if n:
+                yield int(doc_id), n, first
 
-    return docs.mapInPandas(
-        scan, "doc_id long, n_hits long, first_bench_id long")
+    return python_stage(
+        docs, "doc_id long, n_hits long, first_bench_id long", scan)
 
 
 # Temperature-scaled source mixing (the T5/Llama p_i ∝ n_i^α rule,
@@ -1325,37 +1252,29 @@ def html_link_density_blocks(spark, sf_dir):
     farms dropped, paragraphs byte-identical, dense re-indexing. Scale
     shape: pure map (synth + parse + filter inside the Arrow batch),
     zero shuffles before the driver's collect."""
-    from pdfspark.pipeline import REPO_ROOT as _RR, _documents_repartitioned
+    from pdfspark.docgen import text_to_html_linkfarm
+    from pdfspark.kernel.html_extract import extract_html_content_blocks
 
-    docs = _documents_repartitioned(spark, sf_dir)
+    return _html_surface(
+        spark, sf_dir, "doc_id long, block_idx long, block_text string",
+        lambda text, i: extract_html_content_blocks(
+            text_to_html_linkfarm(text, i)))
 
-    def run(batches):
-        import sys
 
-        if _RR not in sys.path:
-            sys.path.insert(0, _RR)
-        import pandas as pd
+def _html_surface(spark, sf_dir, schema: str, parse) -> DataFrame:
+    """The fused single-stage shape of the HTML modality surfaces: each
+    documents row → ``(doc_id, *item)`` for every item of
+    ``parse(text, doc_id)`` (synthesize the page, run one extractor)."""
+    from pdfspark.pipeline import _documents_repartitioned
 
-        from pdfspark.docgen import text_to_html_linkfarm
-        from pdfspark.kernel.html_extract import extract_html_content_blocks
+    def rows(b):
+        for doc_id, text in zip(b["doc_id"], b["text"]):
+            i = int(doc_id)
+            for item in parse(text, i):
+                yield (i, *item)
 
-        for b in batches:
-            ids, idxs, texts = [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                i = int(doc_id)
-                for idx, blk in extract_html_content_blocks(
-                        text_to_html_linkfarm(text, i)):
-                    ids.append(i)
-                    idxs.append(idx)
-                    texts.append(blk)
-            yield pd.DataFrame(
-                {"doc_id": ids, "block_idx": idxs, "block_text": texts},
-                columns=["doc_id", "block_idx", "block_text"],
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, block_idx long, block_text string"
-    )
+    return python_stage(_documents_repartitioned(spark, sf_dir), schema,
+                        rows)
 
 
 # Span-excision decontamination: the REMOVAL tier above flagging —
@@ -1445,33 +1364,22 @@ def decontaminate_span_excise(spark, sf_dir):
         "FROM documents WHERE doc_id % 3 = 0"
     ).repartition(nparts, "doc_id")
 
-    def excise(batches):
+    def excise(b):
         import hashlib
 
-        import pandas as pd
-
         arr = b_exc.value
-        for b in batches:
-            ids, counts, hashes = [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                acc = text
-                n = 0
-                for x in arr:
-                    if x in text:
-                        n += 1
-                    if x in acc:
-                        acc = acc.replace(x, "")
-                ids.append(int(doc_id))
-                counts.append(n)
-                hashes.append(
-                    hashlib.md5(acc.encode("utf-8")).hexdigest())
-            yield pd.DataFrame(
-                {"doc_id": ids, "n_excised": counts, "clean_md5": hashes},
-                columns=["doc_id", "n_excised", "clean_md5"],
-            )
+        for doc_id, text in zip(b["doc_id"], b["text"]):
+            acc = text
+            n = 0
+            for x in arr:
+                if x in text:
+                    n += 1
+                if x in acc:
+                    acc = acc.replace(x, "")
+            yield int(doc_id), n, hashlib.md5(acc.encode("utf-8")).hexdigest()
 
-    return docs.mapInPandas(
-        excise, "doc_id long, n_excised long, clean_md5 string")
+    return python_stage(
+        docs, "doc_id long, n_excised long, clean_md5 string", excise)
 
 
 # Hashed-feature linear quality classifier (the fastText-style scoring
@@ -1790,10 +1698,6 @@ def embedding_cosine_neardup(spark, sf_dir):
     ])
 
     def cell_pairs(pdf):
-        import sys
-
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
         import numpy as np
         import pandas as pd
 
@@ -3275,39 +3179,14 @@ def _html_table_cells_impl(spark, sf_dir):
     the SAME word-pair cell arithmetic, so _TABLE_CELLS_SQL is the
     oracle for both modalities. One fused map stage; surrounding
     nav/footer chrome proves the extractor scopes to table content."""
-    from pdfspark.pipeline import REPO_ROOT as _RR, _documents_repartitioned
+    from pdfspark.docgen import text_to_html_table
+    from pdfspark.kernel.html_extract import extract_html_table_cells
 
-    docs = _documents_repartitioned(spark, sf_dir)
-
-    def run(batches):
-        import sys
-
-        if _RR not in sys.path:
-            sys.path.insert(0, _RR)
-        import pandas as pd
-
-        from pdfspark.docgen import text_to_html_table
-        from pdfspark.kernel.html_extract import extract_html_table_cells
-
-        for b in batches:
-            ids, rows_, cols_, texts = [], [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                i = int(doc_id)
-                for _t, row_idx, col_idx, cell in extract_html_table_cells(
-                        text_to_html_table(text, i)):
-                    ids.append(i)
-                    rows_.append(row_idx)
-                    cols_.append(col_idx)
-                    texts.append(cell)
-            yield pd.DataFrame(
-                {"doc_id": ids, "row_idx": rows_, "col_idx": cols_,
-                 "cell_text": texts},
-                columns=["doc_id", "row_idx", "col_idx", "cell_text"],
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, row_idx long, col_idx long, cell_text string"
-    )
+    return _html_surface(
+        spark, sf_dir,
+        "doc_id long, row_idx long, col_idx long, cell_text string",
+        lambda text, i: (cell[1:] for cell in extract_html_table_cells(
+            text_to_html_table(text, i))))
 
 
 # Grid-resolved HTML table twin (layout 4a/4b on the HTML modality):
@@ -3369,43 +3248,17 @@ def _html_table_spans_impl(spark, sf_dir):
     single-Python-stage shape as html_table_cells; the sequential
     surface stays pinned and untouched. Exceeds the reference, which
     has no DOM table model at all."""
-    from pdfspark.pipeline import REPO_ROOT as _RR, _documents_repartitioned
+    from pdfspark.docgen import text_to_html_spantable
+    from pdfspark.kernel.html_extract import extract_html_table_grid
 
-    docs = _documents_repartitioned(spark, sf_dir)
-
-    def run(batches):
-        import sys
-
-        if _RR not in sys.path:
-            sys.path.insert(0, _RR)
-        import pandas as pd
-
-        from pdfspark.docgen import text_to_html_spantable
-        from pdfspark.kernel.html_extract import extract_html_table_grid
-
-        for b in batches:
-            ids, rows_, cols_, texts, hdrs = [], [], [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                i = int(doc_id)
-                for (_t, row_idx, col_idx, cell,
-                     is_hdr) in extract_html_table_grid(
-                        text_to_html_spantable(text, i)):
-                    ids.append(i)
-                    rows_.append(row_idx)
-                    cols_.append(col_idx)
-                    texts.append(cell)
-                    hdrs.append(int(is_hdr))
-            yield pd.DataFrame(
-                {"doc_id": ids, "row_idx": rows_, "col_idx": cols_,
-                 "cell_text": texts, "is_header": hdrs},
-                columns=["doc_id", "row_idx", "col_idx", "cell_text",
-                         "is_header"],
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, row_idx long, col_idx long, cell_text string,"
-             " is_header long"
-    )
+    return _html_surface(
+        spark, sf_dir,
+        "doc_id long, row_idx long, col_idx long, cell_text string,"
+        " is_header long",
+        lambda text, i: ((row_idx, col_idx, cell, int(is_hdr))
+                         for _t, row_idx, col_idx, cell, is_hdr
+                         in extract_html_table_grid(
+                             text_to_html_spantable(text, i))))
 
 
 # Heading-outline twin: group k of 8 words is a heading iff k%4==0,
@@ -3438,40 +3291,13 @@ def _html_heading_outline_impl(spark, sf_dir):
     into heading text. Byte-exact against the closed-form oracle over
     the 8-word-group generator. Same fused single-Python-stage shape
     as the other HTML modality queries."""
-    from pdfspark.pipeline import REPO_ROOT as _RR, _documents_repartitioned
+    from pdfspark.docgen import text_to_html_outline
+    from pdfspark.kernel.html_extract import extract_html_outline
 
-    docs = _documents_repartitioned(spark, sf_dir)
-
-    def run(batches):
-        import sys
-
-        if _RR not in sys.path:
-            sys.path.insert(0, _RR)
-        import pandas as pd
-
-        from pdfspark.docgen import text_to_html_outline
-        from pdfspark.kernel.html_extract import extract_html_outline
-
-        for b in batches:
-            ids, ords, lvls, texts = [], [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                i = int(doc_id)
-                for ord_idx, level, htext in extract_html_outline(
-                        text_to_html_outline(text, i)):
-                    ids.append(i)
-                    ords.append(ord_idx)
-                    lvls.append(level)
-                    texts.append(htext)
-            yield pd.DataFrame(
-                {"doc_id": ids, "heading_ord": ords, "level": lvls,
-                 "heading_text": texts},
-                columns=["doc_id", "heading_ord", "level", "heading_text"],
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, heading_ord long, level long,"
-             " heading_text string"
-    )
+    return _html_surface(
+        spark, sf_dir,
+        "doc_id long, heading_ord long, level long, heading_text string",
+        lambda text, i: extract_html_outline(text_to_html_outline(text, i)))
 
 
 # Section twin over the SAME outline generator: heading ord o sits at
@@ -3509,42 +3335,14 @@ def _html_section_chunks_impl(spark, sf_dir):
     start nor break sections). Byte-exact headings AND sections
     against the clamped-slice oracle; same fused single-stage
     shape."""
-    from pdfspark.pipeline import REPO_ROOT as _RR, _documents_repartitioned
+    from pdfspark.docgen import text_to_html_outline
+    from pdfspark.kernel.html_extract import extract_html_sections
 
-    docs = _documents_repartitioned(spark, sf_dir)
-
-    def run(batches):
-        import sys
-
-        if _RR not in sys.path:
-            sys.path.insert(0, _RR)
-        import pandas as pd
-
-        from pdfspark.docgen import text_to_html_outline
-        from pdfspark.kernel.html_extract import extract_html_sections
-
-        for b in batches:
-            ids, ords, lvls, hts, sts = [], [], [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                i = int(doc_id)
-                for ord_idx, level, htext, stext in extract_html_sections(
-                        text_to_html_outline(text, i)):
-                    ids.append(i)
-                    ords.append(ord_idx)
-                    lvls.append(level)
-                    hts.append(htext)
-                    sts.append(stext)
-            yield pd.DataFrame(
-                {"doc_id": ids, "heading_ord": ords, "level": lvls,
-                 "heading_text": hts, "section_text": sts},
-                columns=["doc_id", "heading_ord", "level",
-                         "heading_text", "section_text"],
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, heading_ord long, level long,"
-             " heading_text string, section_text string"
-    )
+    return _html_surface(
+        spark, sf_dir,
+        "doc_id long, heading_ord long, level long,"
+        " heading_text string, section_text string",
+        lambda text, i: extract_html_sections(text_to_html_outline(text, i)))
 
 
 # List-structure twin: the generator packs consecutive 3-word groups
@@ -3584,43 +3382,14 @@ def _html_list_items_impl(spark, sf_dir):
     nav/footer/anchor-chrome which must vanish. Same fused
     single-Python-stage shape as the other HTML modality queries —
     one mapInPandas, no shuffle."""
-    from pdfspark.pipeline import REPO_ROOT as _RR, _documents_repartitioned
+    from pdfspark.docgen import text_to_html_lists
+    from pdfspark.kernel.html_extract import extract_html_list_items
 
-    docs = _documents_repartitioned(spark, sf_dir)
-
-    def run(batches):
-        import sys
-
-        if _RR not in sys.path:
-            sys.path.insert(0, _RR)
-        import pandas as pd
-
-        from pdfspark.docgen import text_to_html_lists
-        from pdfspark.kernel.html_extract import extract_html_list_items
-
-        for b in batches:
-            ids, lists, items, ords, texts = [], [], [], [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                i = int(doc_id)
-                for list_idx, item_idx, ordered, itext in (
-                        extract_html_list_items(
-                            text_to_html_lists(text, i))):
-                    ids.append(i)
-                    lists.append(list_idx)
-                    items.append(item_idx)
-                    ords.append(ordered)
-                    texts.append(itext)
-            yield pd.DataFrame(
-                {"doc_id": ids, "list_idx": lists, "item_idx": items,
-                 "ordered": ords, "item_text": texts},
-                columns=["doc_id", "list_idx", "item_idx", "ordered",
-                         "item_text"],
-            )
-
-    return docs.mapInPandas(
-        run, "doc_id long, list_idx long, item_idx long, ordered long,"
-             " item_text string"
-    )
+    return _html_surface(
+        spark, sf_dir,
+        "doc_id long, list_idx long, item_idx long, ordered long,"
+        " item_text string",
+        lambda text, i: extract_html_list_items(text_to_html_lists(text, i)))
 
 
 # Section-aware shard packing (ROADMAP r6 #3b): the pack unit is the
@@ -3819,23 +3588,14 @@ def text_winnowing_neardup(spark, sf_dir):
         T.StructField("fp", T.LongType()),
     ])
 
-    def fingerprints(batches):
-        import sys
-
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
+    def fingerprints(b):
         from pdfspark.textops import winnow
 
-        for b in batches:
-            rows = []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                for fp in set(winnow(text or "", k=8, w=6)):
-                    rows.append({"doc_id": int(doc_id), "fp": fp})
-            yield pd.DataFrame(rows, columns=["doc_id", "fp"])
+        for doc_id, text in zip(b["doc_id"], b["text"]):
+            for fp in set(winnow(text or "", k=8, w=6)):
+                yield int(doc_id), fp
 
-    fps = corpus.mapInPandas(fingerprints, schema)
+    fps = python_stage(corpus, schema, fingerprints)
     a = fps.alias("a")
     b = fps.alias("b")
     return (
@@ -3889,31 +3649,20 @@ def text_longest_repeat(spark, sf_dir):
         T.StructField("lr_len", T.LongType()),
     ])
 
-    def run(batches):
-        import sys
-
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
+    def rows(b):
         from pdfspark.textops import longest_repeat_len
 
-        for b in batches:
-            ids, lens = [], []
-            for doc_id, text in zip(b["doc_id"], b["text"]):
-                # base capped at 100k unique codepoints (chr() range
-                # safety for pathological word counts) — the closed
-                # form is unaffected: L ≤ 17 ≪ the cap, so
-                # min(n_eff, L) == min(n, L) always
-                n = min(len((text or "").split(" ")), 100_000)
-                L = min(n, int(doc_id) % 17 + 1)
-                probe = "".join(chr(0x4E00 + i) for i in range(n))
-                ids.append(int(doc_id))
-                lens.append(int(longest_repeat_len(probe + probe[:L])))
-            yield pd.DataFrame({"doc_id": ids, "lr_len": lens},
-                               columns=["doc_id", "lr_len"])
+        for doc_id, text in zip(b["doc_id"], b["text"]):
+            # base capped at 100k unique codepoints (chr() range
+            # safety for pathological word counts) — the closed
+            # form is unaffected: L ≤ 17 ≪ the cap, so
+            # min(n_eff, L) == min(n, L) always
+            n = min(len((text or "").split(" ")), 100_000)
+            L = min(n, int(doc_id) % 17 + 1)
+            probe = "".join(chr(0x4E00 + i) for i in range(n))
+            yield int(doc_id), int(longest_repeat_len(probe + probe[:L]))
 
-    return docs.mapInPandas(run, schema)
+    return python_stage(docs, schema, rows)
 
 
 # broadcast-side bound for ann_numpy_topk: 100k × 64 dims × 8 B ≈ 50 MB
@@ -3960,48 +3709,28 @@ def ann_numpy_topk(spark, sf_dir):
         T.StructField("rnk", T.IntegerType()),
     ])
 
-    def topk(batches):
-        import sys
-
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import numpy as _np
-        import pandas as pd
-
-        from pdfspark.textops import cosine_matrix, quantize_milli, round_half_up
+    def topk(batch):
+        from pdfspark.textops import cosine_matrix, round_half_up
 
         ids = b_ids.value
-        mat = b_mat.value
-        for batch in batches:
-            if not len(batch):
-                continue
-            qids = batch["vec_id"].to_numpy()
-            qmat = quantize_milli(
-                _np.array(list(batch["embedding"]), dtype=_np.float64)
-            )
-            cos = cosine_matrix(qmat, mat)
-            rows = []
-            for qi, qid in enumerate(qids):
-                scores = cos[qi]
-                order = _np.lexsort((ids, -scores))
-                rank = 0
-                for j in order:
-                    if ids[j] == qid:
-                        continue
-                    rank += 1
-                    if rank > 10:
-                        break
-                    rows.append({
-                        "qid": int(qid),
-                        "neighbor_id": int(ids[j]),
-                        "cosine": round_half_up(float(scores[j]), 6),
-                        "rnk": rank,
-                    })
-            yield pd.DataFrame(rows, columns=["qid", "neighbor_id",
-                                              "cosine", "rnk"])
+        qmat = quantize_milli(
+            np.array(list(batch["embedding"]), dtype=np.float64)
+        )
+        cos = cosine_matrix(qmat, b_mat.value)
+        for qi, qid in enumerate(batch["vec_id"].to_numpy()):
+            scores = cos[qi]
+            rank = 0
+            for j in np.lexsort((ids, -scores)):
+                if ids[j] == qid:
+                    continue
+                rank += 1
+                if rank > 10:
+                    break
+                yield (int(qid), int(ids[j]),
+                       round_half_up(float(scores[j]), 6), rank)
 
     queries_df = emb.filter("vec_id < 5").repartition(2)
-    return queries_df.mapInPandas(topk, schema)
+    return python_stage(queries_df, schema, topk)
 
 
 @register(
@@ -4394,10 +4123,6 @@ def ann_numpy_ivf(spark, sf_dir):
     ])
 
     def cell_topk(pdf):
-        import sys
-
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
         import numpy as _np
         import pandas as pd
 
@@ -4430,6 +4155,7 @@ def ann_numpy_ivf(spark, sf_dir):
 
     import pandas as pd  # noqa: F401  (applyInPandas return type)
 
+    _worker_path(spark)  # cell_topk imports pdfspark.textops
     return base.groupBy("bucket").applyInPandas(cell_topk, schema)
 
 
@@ -5131,28 +4857,13 @@ def text_compression_ratio(spark, sf_dir):
 
     _load(spark, sf_dir, "documents")
 
-    def run(batches):
-        import sys
-
-        if REPO_ROOT not in sys.path:
-            sys.path.insert(0, REPO_ROOT)
-        import pandas as pd
-
+    def rows(b):
         from pdfspark.textops import compression_ratio_bp
 
-        for b in batches:
-            bps = [compression_ratio_bp(t or "") for t in b["text"]]
-            expect = b["expect_bp"]
-            yield pd.DataFrame({
-                "doc_id": b["doc_id"].astype("int64"),
-                "raw_len": [
-                    len((t or "").encode("utf-8")) for t in b["text"]
-                ],
-                "bp_ok": [
-                    (bp == e) if e >= 0 else (1 <= bp <= 30000)
-                    for bp, e in zip(bps, expect)
-                ],
-            })
+        for doc_id, t, e in zip(b["doc_id"], b["text"], b["expect_bp"]):
+            bp = compression_ratio_bp(t or "")
+            yield (int(doc_id), len((t or "").encode("utf-8")),
+                   bool(bp == e) if e >= 0 else 1 <= bp <= 30000)
 
     schema = T.StructType([
         T.StructField("doc_id", T.LongType()),
@@ -5166,7 +4877,7 @@ def text_compression_ratio(spark, sf_dir):
     corpus = spark.table("documents").select(
         "doc_id", "text", F.lit(-1).cast("long").alias("expect_bp")
     ).unionByName(spots)
-    return corpus.mapInPandas(run, schema)
+    return python_stage(corpus, schema, rows)
 
 
 @register(

@@ -18,7 +18,9 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pdfspark.pipeline import EXTRACT_SCHEMA, PAGES_SCHEMA, _extract_batches, filter_pdf_rows
+from pdfspark.pipeline import (EXTRACT_SCHEMA, PAGES_SCHEMA, _extract_rows,
+                               filter_pdf_rows, python_stage)
+from pdfspark.textops import band_rows
 
 
 def read_pages_stream(
@@ -35,9 +37,8 @@ def read_pages_stream(
 
 def extract_stream(pages: DataFrame) -> DataFrame:
     """Same kernel, streaming source: filter → mapInPandas."""
-    return filter_pdf_rows(pages).select("url", "html").mapInPandas(
-        _extract_batches, EXTRACT_SCHEMA
-    )
+    return python_stage(filter_pdf_rows(pages).select("url", "html"),
+                        EXTRACT_SCHEMA, _extract_rows)
 
 
 def windowed_metrics(pages: DataFrame) -> DataFrame:
@@ -383,27 +384,12 @@ _STREAM_BANDS_SCHEMA = "doc_id long, band int, sig string"
 _BAND_INDEX_SCHEMA = "hist_id long, band int, sig string"
 
 
-def _plain_band_batches(batches):
-    """mapInPandas body: (doc_id, text) → (doc_id, band, sig) — the SAME
-    Arrow minhash kernel as the batch LSH queries (textops), without the
+def _bands(docs: DataFrame) -> DataFrame:
+    """(doc_id, text) → (doc_id, band, sig) through the SAME Arrow minhash
+    kernel as the batch LSH queries (textops.band_rows), without the
     batch harness's synthesized mutants (a stream carries real rows)."""
-    import os
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    if repo not in sys.path:
-        sys.path.insert(0, repo)
-    import pandas as pd
-
-    from pdfspark.textops import minhash_band_sigs
-
-    for b in batches:
-        rows = []
-        for doc_id, text in zip(b["doc_id"], b["text"]):
-            for band, sig in minhash_band_sigs(str(text)):
-                rows.append({"doc_id": int(doc_id), "band": band,
-                             "sig": sig})
-        yield pd.DataFrame(rows, columns=["doc_id", "band", "sig"])
+    return python_stage(docs.select("doc_id", "text"), _STREAM_BANDS_SCHEMA,
+                        band_rows)
 
 
 def build_band_index(docs: DataFrame) -> DataFrame:
@@ -411,9 +397,7 @@ def build_band_index(docs: DataFrame) -> DataFrame:
     hist_id) rows — the precomputed table the incremental/stream dedup
     topologies join against. At 10^12 scale this is written bucketed by
     (band, sig) once per corpus rebuild."""
-    return docs.mapInPandas(
-        _plain_band_batches, _STREAM_BANDS_SCHEMA
-    ).withColumnRenamed("doc_id", "hist_id")
+    return _bands(docs).withColumnRenamed("doc_id", "hist_id")
 
 
 def sized_bands(band_index: DataFrame) -> DataFrame:
@@ -450,9 +434,7 @@ def minhash_dedup_decisions(batch_docs: DataFrame,
     parquet-backed index re-reads instead, and callers draining a
     stream should pass a precomputed ``hist_sized`` so the aggregation
     doesn't rerun per micro-batch."""
-    bands = batch_docs.select("doc_id", "text").mapInPandas(
-        _plain_band_batches, _STREAM_BANDS_SCHEMA
-    )
+    bands = _bands(batch_docs)
     if hist_sized is None:
         hist_sized = sized_bands(band_index)
     hits = (
@@ -1754,9 +1736,7 @@ def run_band_index_append_stream_once(
     bounded by the compaction cadence, not the crawl cadence."""
 
     def append(batch_df: DataFrame, batch_id: int) -> None:
-        bands = batch_df.select("doc_id", "text").mapInPandas(
-            _plain_band_batches, _STREAM_BANDS_SCHEMA
-        ).withColumnRenamed("doc_id", "hist_id")
+        bands = _bands(batch_df).withColumnRenamed("doc_id", "hist_id")
         bands.write.mode("overwrite").parquet(
             f"{index_dir}/delta/batch_id={batch_id}"
         )

@@ -126,6 +126,14 @@ def minhash_band_sigs(text: str, n_hashes: int = 8, band_width: int = 2):
     ]
 
 
+def band_rows(b):
+    """Row function of every minhash stage (batch LSH queries, band index
+    builds, stream appends): (doc_id, text) batch → (doc_id, band, sig)."""
+    for doc_id, text in zip(b["doc_id"], b["text"]):
+        for band, sig in minhash_band_sigs(str(text)):
+            yield int(doc_id), band, sig
+
+
 def compression_ratio_bp(text: str) -> int:
     """zlib-compressed size as basis points of the raw utf-8 size — the
     CCNet-style repetition/garbage signal (highly repetitive text

@@ -16,22 +16,12 @@ import sys
 REPO_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO_ROOT)
 
-HEADLINE = [
-    "pdf_extract_roundtrip",
-    "html_extract_roundtrip",
-    "q1_pricing_summary",
-    "q5_region_revenue",
-    "window_running_sum",
-    "dedup_exact",
-    "dedup_minhash_lsh",
-    "ann_bruteforce_topk",
-    "text_token_count",
-]
+from bench import BENCH_QUERIES  # noqa: E402
 
 
 def main() -> None:
     tag, when = sys.argv[1], sys.argv[2]
-    names = sys.argv[3:] or HEADLINE
+    names = sys.argv[3:] or BENCH_QUERIES
     out_dir = os.path.join(REPO_ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
 

@@ -38,6 +38,7 @@ def main() -> None:
         PAGES_SCHEMA,
         build_session,
         extract_pages,
+        python_stage,
     )
 
     spark = build_session(cores=args.cores, shuffle_partitions=args.cores * 2,
@@ -57,33 +58,17 @@ def main() -> None:
         docs = docs.repartition(args.cores * 2, "doc_id").cache()
         n_docs = docs.count()
 
-        def gen(batches):
-            import sys
-
-            if "/root/repo" not in sys.path:
-                sys.path.insert(0, "/root/repo")
+        def gen(b):
             import datetime
-
-            import pandas as pd
 
             from pdfspark.docgen import text_to_pdf
 
             epoch = datetime.datetime(2025, 1, 1)
-            for b in batches:
-                yield pd.DataFrame(
-                    {
-                        "url": [
-                            f"https://corpus.test/{int(i):010d}.pdf"
-                            for i in b["doc_id"]
-                        ],
-                        "warc_ts": [epoch] * len(b),
-                        "html": [text_to_pdf(t) for t in b["text"]],
-                        "text": "",
-                        "lang": b["lang"],
-                    }
-                )
+            for i, t, lang in zip(b["doc_id"], b["text"], b["lang"]):
+                yield (f"https://corpus.test/{int(i):010d}.pdf", epoch,
+                       text_to_pdf(t), "", lang)
 
-        pages = docs.mapInPandas(gen, PAGES_SCHEMA)
+        pages = python_stage(docs, PAGES_SCHEMA, gen)
 
         def one_run() -> float:
             t0 = time.perf_counter()

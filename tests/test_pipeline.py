@@ -242,6 +242,68 @@ def test_parquet_scan_width_proxy(spark, tmp_path):
     assert _parquet_scan_width(str(tmp_path / "nope.parquet"), 1) == 0
 
 
+def test_footer_probes_on_hive_partitioned_dir(tmp_path):
+    """A hive-partitioned directory keeps its data files only in k=v/
+    subdirectories: both footer probes must find them there, and a
+    directory with no data file at all is UNKNOWN (-1 rows, width 0),
+    never "known small" — a 0-row answer would send percentiles_exact
+    to its single-buffer regime at any scale."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from pdfspark.pipeline import _parquet_num_rows, _parquet_scan_width
+
+    hive = tmp_path / "orders.parquet"
+    for k, n in ((0, 30), (1, 12)):
+        part = hive / f"k={k}"
+        part.mkdir(parents=True)
+        pq.write_table(pa.table({"v": list(range(n))}),
+                       str(part / "part-0.parquet"))
+    (hive / "_SUCCESS").write_bytes(b"")
+    assert _parquet_num_rows(str(hive)) == 42
+    assert _parquet_scan_width(str(hive), 128 * 1024 * 1024) == 2
+
+    empty = tmp_path / "empty.parquet"
+    (empty / "k=0").mkdir(parents=True)
+    assert _parquet_num_rows(str(empty)) == -1
+    assert _parquet_scan_width(str(empty), 1) == 0
+    assert _parquet_num_rows(str(tmp_path / "nope.parquet")) == -1
+
+
+_FOREIGN_SESSION = """
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from pdfspark.pipeline import (extract_pages, pages_from_fixtures,
+                               roundtrip_extract)
+spark = (SparkSession.builder.master("local[2]")
+         .config("spark.sql.shuffle.partitions", "4").getOrCreate())
+print(len(extract_pages(pages_from_fixtures(spark)).collect()))
+print(len(roundtrip_extract(spark, sys.argv[2], light=True).collect()))
+spark.stop()
+"""
+
+
+def test_python_stages_run_in_a_foreign_session(tmp_path):
+    """A session the engine did not build (plain builder, no PYTHONPATH,
+    cwd outside the repo, the repo only on the DRIVER's import path)
+    still runs the Python stages: cloudpickle ships the row functions by
+    reference, so the workers must be able to import pdfspark before
+    any body code runs."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", _FOREIGN_SESSION, repo, SF_DIR],
+        cwd=str(tmp_path), env=env, capture_output=True, text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.split() == ["77", "500"], out.stdout
+
+
 def test_parse_bytes_conf_suffixes():
     from pdfspark.pipeline import _parse_bytes_conf
 

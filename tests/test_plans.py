@@ -762,3 +762,38 @@ def test_percentiles_exact_rank_branch_is_conditional_and_identical(
     monkeypatch.delenv("SPARK_GRAFT_PCT_SINGLE_BUFFER_ROWS")
     buffered = QUERIES["percentiles_exact"](spark, d).collect()
     assert forced == buffered
+
+
+def test_every_map_in_pandas_goes_through_python_stage():
+    """Source guard: the one ``.mapInPandas(`` under pdfspark/ is the one
+    inside pipeline.python_stage, and no module touches the import path
+    (the worker path is set once, driver-side, by
+    pipeline._worker_path) — hand-written stage bodies and per-closure
+    path bootstraps cannot grow back."""
+    import ast
+    import os
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "pdfspark")
+    stages, path_edits, helper = [], [], None
+    for root, _dirs, files in os.walk(pkg):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            rel = os.path.relpath(os.path.join(root, f), pkg)
+            with open(os.path.join(root, f), encoding="utf-8") as fh:
+                src = fh.read()
+            for i, line in enumerate(src.splitlines(), 1):
+                if ".mapInPandas(" in line:
+                    stages.append((rel, i))
+                if "sys.path" in line:
+                    path_edits.append((rel, i))
+            if rel == "pipeline.py":
+                helper = next(
+                    (n.lineno, n.end_lineno) for n in ast.parse(src).body
+                    if isinstance(n, ast.FunctionDef)
+                    and n.name == "python_stage")
+    assert path_edits == [], path_edits
+    assert len(stages) == 1 and stages[0][0] == "pipeline.py", stages
+    assert helper[0] <= stages[0][1] <= helper[1], (stages, helper)
